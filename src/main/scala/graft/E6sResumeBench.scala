@@ -52,10 +52,8 @@ object E6sResumeBench {
     // stage once (side effect of building the stream), then reuse the
     // bucket files directly for the phased-arrival landing dirs
     DocStreams.docsStreamBucketed(spark, sfDir, nBuckets)
-    val staged = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-docs-bucketed",
-      graft.util.PathKeys.keyedName(sfDir) + s"-$nBuckets")
+    val staged = graft.util.Staging.keyedDir("stream-docs-bucketed", sfDir,
+      s"-$nBuckets")
     import scala.jdk.CollectionConverters._
     val parts = scala.util.Using.resource(Files.list(staged)) { st =>
       st.iterator().asScala

@@ -11,8 +11,16 @@ object ClusterOps {
     * near-dup cluster diameter; the convergence guard throws loudly if
     * it is ever hit. Overridable via system property so the failure
     * path (checkpoint cleanup on a non-converged run) is testable. */
-  def MaxCcIters: Int =
-    sys.props.get("graft.e16.maxIters").map(_.toInt).getOrElse(100)
+  def MaxCcIters: Int = loopKnob("graft.e16.maxIters").getOrElse(100)
+
+  /** A loop knob read from a system property and validated where it is
+    * read: a malformed value, or one below 1, fails with a named
+    * IllegalArgumentException before the loop does any work. */
+  private def loopKnob(key: String): Option[Int] =
+    sys.props.get(key).map { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"$key must be an integer >= 1, got '$v'"))
+    }
 
   /** Reliable checkpoint location for iterative queries. `checkpoint()`
     * (vs `localCheckpoint()`) writes blocks to this directory — an
@@ -23,8 +31,7 @@ object ClusterOps {
   def ensureCheckpointDir(s: SparkSession): String = synchronized {
     s.sparkContext.getCheckpointDir.getOrElse {
       val dir = sys.env.getOrElse("GRAFT_CHECKPOINT_DIR",
-        sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures")
-          + "/checkpoints")
+        graft.util.Staging.root + "/checkpoints")
       s.sparkContext.setCheckpointDir(dir)
       s.sparkContext.getCheckpointDir.get
     }
@@ -113,6 +120,12 @@ object ClusterOps {
   private[graft] def componentsWithStats(
       s: SparkSession, undirected: DataFrame,
       relCaches: Seq[DataFrame]): (DataFrame, Int, Int) = {
+    // knobs validated before any loop work; a rejected knob still
+    // releases the caller's caches, as the loop would have
+    val (maxIters, ckptOverride) =
+      try (MaxCcIters, loopKnob("graft.e16.ckptEvery"))
+      catch { case e: IllegalArgumentException =>
+        relCaches.foreach(_.unpersist(blocking = false)); throw e }
     var segT0 = System.nanoTime()
     def seg(tag: String): Unit = if (sys.env.contains("GRAFT_E16_DEBUG")) {
       System.err.println(
@@ -196,8 +209,8 @@ object ClusterOps {
     // the cache). Overridable for the cadence spec via the
     // graft.e16.ckptEvery system property.
     val CkptEveryWide = 3
-    val ckptEvery = sys.props.get("graft.e16.ckptEvery").map(_.toInt)
-      .getOrElse(if (loopParts == 1) 1 else CkptEveryWide)
+    val ckptEvery =
+      ckptOverride.getOrElse(if (loopParts == 1) 1 else CkptEveryWide)
     var heldCaches: List[DataFrame] = Nil // persisted rounds since last snapshot
     var lastCkpt: Seq[String] = Seq.empty // current durable snapshot's files
     var snapshots = 0 // durable label writes (the cadence the spec pins)
@@ -236,7 +249,7 @@ object ClusterOps {
     // per round, no separate convergence job. The ==0 convergence test
     // is robust even if the checkpoint's internal write re-runs the
     // plan and double-counts the accumulator (0 doubles to 0).
-      while (changed > 0 && iter < MaxCcIters) {
+      while (changed > 0 && iter < maxIters) {
         val msgs = edgesLoop
           .join(frontier, edgesLoop("b") === frontier("node"))
           .groupBy(col("a")).agg(min(col("lbl")).as("nbl"))

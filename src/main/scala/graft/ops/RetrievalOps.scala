@@ -265,19 +265,14 @@ object RetrievalOps {
     import graft.streaming.{LexStreams, SnapshotFolds, VecStreams}
     LexStreams.ensureFoldBase(s, d)
     VecStreams.ensureFoldBase(s, d)
-    val fixRoot = sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures")
-    val key = graft.util.PathKeys.keyedName(d)
-    val lexWork = java.nio.file.Paths.get(fixRoot, "stream-e71v-lex", key + "-4")
-    val vecWork = java.nio.file.Paths.get(fixRoot, "stream-e71v-vec", key + "-4")
+    val lexWork = graft.util.Staging.keyedDir("stream-e71v-lex", d, "-4")
+    val vecWork = graft.util.Staging.keyedDir("stream-e71v-vec", d, "-4")
     graft.streaming.DocStreams.deleteTree(lexWork)
     graft.streaming.DocStreams.deleteTree(vecWork)
     LexStreams.drain(s, d, lexWork)
     VecStreams.e2fDrain(s, d, vecWork)
-    def pinned(work: java.nio.file.Path, tree: String): Seq[String] = {
-      val t = work.resolve(tree)
-      SnapshotFolds.readManifest(t, DeclaredHybridSnap)
-        .map(n => t.resolve(n).toString)
-    }
+    def pinned(work: java.nio.file.Path, tree: String): Seq[String] =
+      SnapshotFolds.pinnedDirs(work.resolve(tree), DeclaredHybridSnap)
     fuseAtDirs(s, d, pinned(lexWork, "segs"), pinned(lexWork, "lens"),
       pinned(vecWork, "folds"))
       .withColumn("snapshot_id", lit(DeclaredHybridSnap))

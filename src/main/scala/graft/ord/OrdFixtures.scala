@@ -71,10 +71,15 @@ case class OrdRaw(file: String, dataset_id: String, reaction_id: String, raw: St
   * than with `spark.read.json` — the files are tiny (≤650 KB); all heavy
   * lifting stays in Spark over the parquet.
   */
+/** The ORD reference golden inputs are not where [[OrdFixtures]] reads
+  * them: `missing` lists every absent catalog file under `dir`. */
+final class MissingReferenceFiles(val dir: String, val missing: Seq[String])
+    extends java.io.FileNotFoundException(
+      s"ORD reference golden files missing under $dir: ${missing.mkString(", ")}")
+
 object OrdFixtures {
 
-  val fixtureDir: String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures")
+  val fixtureDir: String = graft.util.Staging.root
   // _v2: fixture schema is versioned in the path so a stale on-disk
   // fixture from an older schema can never be silently read
   def nestedPath: String = s"$fixtureDir/ord_nested_v2.parquet"
@@ -87,6 +92,16 @@ object OrdFixtures {
     "ord_formatted_data.json", "ord_formatted_data_one.json",
     "ord_formatted_data_two.json", "ord_formatted_data_three.json",
     "ord_formatted_data_single.json")
+
+  /** The reference golden files' directory, checked: when any catalog
+    * file is absent, ONE [[MissingReferenceFiles]] names each missing
+    * file — instead of a parse failure per consumer. The ORD keys and
+    * the golden specs read the files through this accessor only. */
+  private[graft] def referenceDir: String = {
+    val missing = files.filterNot(f => new File(s"$refDir/$f").isFile)
+    if (missing.nonEmpty) throw new MissingReferenceFiles(refDir, missing)
+    refDir
+  }
 
   /** Idempotently build the fixtures (checked via parquet _SUCCESS). */
   def ensure(spark: SparkSession): Unit = synchronized {
@@ -104,7 +119,7 @@ object OrdFixtures {
   def parseAll(): (Seq[OrdDataset], Seq[OrdRaw]) = {
     val mapper = new ObjectMapper()
     val out = files.flatMap { f =>
-      val root = mapper.readTree(new File(s"$refDir/$f"))
+      val root = mapper.readTree(new File(s"$referenceDir/$f"))
       root.properties.asScala.toSeq.zipWithIndex.map { case (e, i) =>
         parseDataset(f, e.getKey, e.getValue, i)
       }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.util.Staging
 
 /** Z-order (Morton-curve) clustered parquet layout + a multi-dimension
   * range scan over it — the data-layout technique that makes BOTH
@@ -56,23 +57,16 @@ object ZOrderLayout {
   }
 
   def layoutDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/events_zorder/${graft.util.PathKeys.keyedName(d)}"
+    Staging.keyedDir("events_zorder", d).toString
 
   /** One-time z-clustered write: rows carry their z-value, the exchange
     * is a range-repartition ON z and each output task sorts its slice,
     * so every row group's (user, hour) bounding box is a compact tile.
     * Staleness signature matches [[PartitionedLayout.ensure]]. */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "events.parquet")
-    val sig =
-      s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
-    val marker = Paths.get(layoutDir(d), "_STAGED_SIG")
-    val stale = !new java.io.File(s"${layoutDir(d)}/_SUCCESS").exists() ||
-      !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
+  def ensure(s: SparkSession, d: String): Unit =
+    Staging.ensure(java.nio.file.Paths.get(layoutDir(d)),
+      Staging.sourceSig(java.nio.file.Paths.get(d, "events.parquet")),
+      Seq("_SUCCESS")) {
       // INT64-micros timestamps: INT96 (the compat default) carries no
       // usable column stats, which would kill both the ts pushdown and
       // the row-group pruning this layout exists for. The conf is
@@ -98,9 +92,7 @@ object ZOrderLayout {
           case None    => s.conf.unset(key)
         }
       }
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
-  }
 
   /** E62: 2-D range scan over the z-clustered layout — users 4..79 in
     * a 10-day time window, aggregated per z-tile (zval >> 20, i.e. the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.ops.SimOps
+import graft.util.Staging
 
 /** Structured-Streaming similarity INGEST — the one LLM-pipeline
   * capability whose batch forms (e6/e7b/e8) had no streaming analogue:
@@ -54,57 +55,27 @@ object DocStreams {
     * parquet split once into `nBuckets` contiguous doc_id-range files,
     * mtimes staggered so the file source replays them in ARRIVAL ORDER
     * one per micro-batch — the landing shape of an incremental corpus
-    * ingest. Same staleness protocol as the events staging: (size,
-    * mtime) signature marker AND every expected bucket file present
-    * (a surviving marker over deleted buckets must not pass as fresh). */
+    * ingest, staged under the [[Staging.stageLanding]] contract:
+    * (size, mtime) signature marker AND every expected bucket file
+    * present (a surviving marker over deleted buckets must not pass as
+    * fresh). */
   def docsStreamBucketed(s: SparkSession, dir: String, nBuckets: Int): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val src = Paths.get(dir, "documents.parquet")
-    val landing = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-docs-bucketed",
-      graft.util.PathKeys.keyedName(dir) + s"-$nBuckets")
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val bucketsPresent = (0 until nBuckets)
-        .forall(i => Files.exists(landing.resolve(f"docs-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !bucketsPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(docsSchema).parquet(src.toString)
-        val bounds = raw.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (idMin, idMax) = (bounds.getLong(0), bounds.getLong(1))
-        val span = math.max(1L, idMax - idMin + 1)
-        val tmp = landing.resolve("_tmp")
-        (0 until nBuckets).foreach { i =>
-          val lo = idMin + span * i / nBuckets
-          val hi = idMin + span * (i + 1) / nBuckets
-          raw.where(col("doc_id") >= lo && col("doc_id") < hi)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"doc bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"docs-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          // staggered mtimes: the file source replays oldest-first
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
+    val src = java.nio.file.Paths.get(dir, "documents.parquet")
+    val landing = Staging.stageLanding(
+      Staging.keyedDir("stream-docs-bucketed", dir, s"-$nBuckets"),
+      Staging.sourceSig(src),
+      Staging.partNames("docs", nBuckets)) {
+      val raw = s.read.schema(docsSchema).parquet(src.toString)
+      val bounds = raw.agg(min(col("doc_id")), max(col("doc_id"))).head()
+      val (idMin, idMax) = (bounds.getLong(0), bounds.getLong(1))
+      val span = math.max(1L, idMax - idMin + 1)
+      (0 until nBuckets).map { i =>
+        val lo = idMin + span * i / nBuckets
+        val hi = idMin + span * (i + 1) / nBuckets
+        raw.where(col("doc_id") >= lo && col("doc_id") < hi)
       }
     }
-    s.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
+    FoldDrain.replay(s, landing, docsSchema)
   }
 
   private[graft] def deleteTree(root: java.nio.file.Path): Unit = {
@@ -228,7 +199,7 @@ object DocStreams {
     val matchRoot = work.resolve("matches")
     Files.createDirectories(indexRoot)
     Files.createDirectories(matchRoot)
-    val q = SimOps.perRowBands(docsStream).where(col("bh").isNotNull)
+    FoldDrain.runToEnd(SimOps.perRowBands(docsStream).where(col("bh").isNotNull)
       .writeStream
       .foreachBatch { (df: DataFrame, id: Long) =>
         // probed twice (self-pairs + index probe) and written once —
@@ -264,13 +235,7 @@ object DocStreams {
           batch.write.mode("overwrite")
             .parquet(indexRoot.resolve(s"batch=$id").toString)
         } finally batch.unpersist(blocking = false)
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q) // busy-vs-wall split for the bench
-    } finally q.stop()
+      }, work.resolve("ckpt"))
   }
 
   /** All collision rows a drain (or a sequence of resumed drains over
@@ -332,7 +297,7 @@ object DocStreams {
     Files.createDirectories(dead)
     val flagged = graft.ops.CurationOps.repetitionMetrics(docsStream)
       .select(col("doc_id"), col("source"), col("passes_repetition"))
-    val q = flagged.writeStream
+    FoldDrain.runToEnd(flagged.writeStream
       .foreachBatch { (df: DataFrame, id: Long) =>
         val b = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
@@ -341,13 +306,7 @@ object DocStreams {
           b.where(!col("passes_repetition"))
             .write.mode("overwrite").parquet(dead.resolve(s"batch=$id").toString)
         } finally b.unpersist(blocking = false)
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
+      }, work.resolve("ckpt"))
   }
 
   /** The concrete `batch=N` directories under `root`, sorted. Passing
@@ -385,9 +344,7 @@ object DocStreams {
   }
 
   def e10sQualityStream(s: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e10s", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e10s", dir, "-4")
     deleteTree(work)
     val src = java.nio.file.Paths.get(dir, "documents.parquet")
     val perTrigger = StreamTune.sourceBytes(src) / 4
@@ -407,9 +364,7 @@ object DocStreams {
     val rel = SimOps.minhashRelations(s, dir,
       mh = (h, sh) => md5(concat(lit(s"$h:"), sh)),
       bandHash = (a, b) => md5(concat(a, b)))
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e6s", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e6s", dir, "-4")
     // a fresh ingest per invocation: leftover checkpoint + index from a
     // previous drain would resume an already-finished stream and emit
     // nothing (the fixture-staleness analogue of drainToTable's wipe)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.Staging
+
 /** Structured Streaming forms of the event-time operators (SURVEY.md
   * §2.10 C1-C5, E4-E5) — the engine-level analogue of the reference's
   * incremental page-at-a-time ingestion with progress state
@@ -42,33 +44,12 @@ object EventStreams {
     * one file per micro-batch (C3). The testdata ships events as a single
     * parquet file, so it is staged (hard-linked/copied once) into a
     * landing directory — the layout a production file stream reads. */
-  def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(dir, "events.parquet")
-    // Landing dir keyed by the FULL source path (hashed) plus basename, so
-    // /a/sf0.1 and /b/sf0.1 never collide; staged copy is refreshed when
-    // the source's (size, mtime) changes — no silently-stale stream input.
-    val landing = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-events", graft.util.PathKeys.keyedName(dir))
-    synchronized {
-      val dst = landing.resolve("events.parquet")
-      val marker = landing.resolve("_STAGED")
-      // exact (size, mtime) signature equality, same protocol as the
-      // bucketed staging: an mtime-ordering check misses a source
-      // replaced by mv with an older-or-equal timestamp
-      val sig = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val stale = !Files.exists(dst) || !Files.exists(marker) ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        Files.createDirectories(landing)
-        Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING,
-          StandardCopyOption.COPY_ATTRIBUTES)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
-    }
-    streamOver(s, landing.toString)
-  }
+  def eventsStream(s: SparkSession, dir: String): DataFrame =
+    // landing keyed by the FULL source path (hashed) plus basename, so
+    // /a/sf0.1 and /b/sf0.1 never collide; the staged copy is refreshed
+    // on any (size, mtime) change — no silently-stale stream input
+    streamOver(s, Staging.stageCopy(Staging.keyedDir("stream-events", dir),
+      evSrc(dir)).toString)
 
   /** E4 streaming: watermarked tumbling-window aggregation. Late data
     * beyond 10 minutes is dropped from state — bounded memory at any
@@ -220,18 +201,6 @@ object EventStreams {
     s.read.parquet(path).orderBy("click_id", "purchase_id")
   }
 
-  /** Recursive delete; Files.walk streams hold a directory descriptor
-    * until closed, hence Using.resource. */
-  private def deleteTree(root: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(root))
-      scala.util.Using.resource(Files.walk(root)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(p => Files.deleteIfExists(p))
-      }
-  }
-
   /** Drain a streaming DataFrame into a memory-sink table and return the
     * table name. The checkpoint is a THROWAWAY (a memory sink cannot
     * resume across processes anyway): it lives on the scratch root
@@ -251,9 +220,7 @@ object EventStreams {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite)
       java.nio.file.Paths.get("/dev/shm/graft-stream-ckpt")
-    else java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-ckpt")
+    else java.nio.file.Paths.get(Staging.root, "stream-ckpt")
   }
 
   private[graft] def drainToTable(
@@ -264,19 +231,11 @@ object EventStreams {
     // and fail LOUDLY if the wipe fails (resuming a stale checkpoint
     // against a fresh memory sink silently under-reports rows, which is
     // exactly the failure the wipe exists to prevent)
-    deleteTree(ckpt)
-    val q = df.writeStream
-      .format("memory").queryName(name).outputMode(mode)
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q) // busy-vs-wall split for the bench
-    } finally {
-      q.stop()
-      // best-effort: the checkpoint has no further use
-      scala.util.Try(deleteTree(ckpt))
-    }
+    DocStreams.deleteTree(ckpt)
+    try FoldDrain.runToEnd(
+      df.writeStream.format("memory").queryName(name).outputMode(mode), ckpt)
+    // best-effort: the checkpoint has no further use
+    finally scala.util.Try(DocStreams.deleteTree(ckpt))
     name
   }
 
@@ -294,23 +253,13 @@ object EventStreams {
     // checkpoint on scratch (throwaway, see scratchRoot); OUTPUT stays
     // on the fixture root — it is the declared result the caller reads
     val ckpt = scratchRoot.resolve(s"$name-ckpt")
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-drain", name, "out")
-    deleteTree(ckpt)
-    deleteTree(out)
-    val q = df.writeStream
+    val out = java.nio.file.Paths.get(Staging.root, "stream-drain", name, "out")
+    DocStreams.deleteTree(ckpt)
+    DocStreams.deleteTree(out)
+    try FoldDrain.runToEnd(df.writeStream
       .format("parquet").outputMode("append")
-      .option("path", out.toString)
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally {
-      q.stop()
-      scala.util.Try(deleteTree(ckpt))
-    }
+      .option("path", out.toString), ckpt)
+    finally scala.util.Try(DocStreams.deleteTree(ckpt))
     out.toString
   }
 
@@ -440,66 +389,35 @@ object EventStreams {
       filesPerTrigger: Int = 1, replayOrder: Seq[Int] = Nil): DataFrame = {
     require(replayOrder.isEmpty || replayOrder.sorted == (0 until nBuckets),
       s"replayOrder must be a permutation of 0 until $nBuckets: $replayOrder")
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val src = Paths.get(dir, "events.parquet")
-    val landing = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-events-bucketed",
-      graft.util.PathKeys.keyedName(dir) + s"-$nBuckets" +
-        (if (replayOrder.nonEmpty) "-o" + replayOrder.mkString("") else ""))
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      // the "v2:" prefix versions the STAGING TRANSFORM itself (buckets
-      // now always land with a µs TimestampType ts): a source-only
+    val src = evSrc(dir)
+    val landing = Staging.stageLanding(
+      Staging.keyedDir("stream-events-bucketed", dir, s"-$nBuckets" +
+        (if (replayOrder.nonEmpty) "-o" + replayOrder.mkString("") else "")),
+      // the "v2:" tag versions the STAGING TRANSFORM itself (buckets
+      // always land with a µs TimestampType ts): a source-only
       // signature would keep buckets staged by an older code version
       // whose column semantics differ — e.g. micros stored as raw longs,
       // which the nanos branch of normalizeEventTs would then misread
-      val sig = s"v2:${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      // like eventsStream's !Files.exists(dst) clause: a surviving marker
-      // over deleted bucket files must not pass as fresh — require every
-      // expected events-*.parquet alongside the signature match
-      val bucketsPresent = (0 until nBuckets)
-        .forall(i => Files.exists(landing.resolve(f"events-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !bucketsPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) deleteTree(landing)
-        Files.createDirectories(landing)
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        // normalize ts at staging time: buckets always land with a µs
-        // TimestampType column, so the stream side needs no per-fixture
-        // branching and old/new driver fixtures stage identically
-        val raw = graft.Tables.normalizeEventTs(s.read.parquet(src.toString))
-          .withColumn("_ts_us", expr("unix_micros(ts)"))
-        val bounds = raw.agg(min(col("_ts_us")), max(col("_ts_us"))).head()
-        val (tsMin, tsMax) = (bounds.getLong(0), bounds.getLong(1))
-        val span = math.max(1L, tsMax - tsMin + 1)
-        val tmp = landing.resolve("_tmp")
-        (0 until nBuckets).foreach { i =>
-          val lo = tsMin + span * i / nBuckets
-          val hi = tsMin + span * (i + 1) / nBuckets
-          raw.where(col("_ts_us") >= lo && col("_ts_us") < hi).drop("_ts_us")
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"events-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          // staggered mtimes: the file source replays oldest-first. The
-          // default places bucket i at replay position i (timeline
-          // order); a replayOrder permutation stages an OUT-OF-ORDER
-          // landing — bucket replayOrder(p) arrives at position p — the
-          // late-data shape e4l's watermark-drop demonstration needs.
-          val pos = if (replayOrder.nonEmpty) replayOrder.indexOf(i) else i
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + pos * 60_000L))
-        }
-        deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
+      Staging.sourceSig(src, "v2:"),
+      Staging.partNames("events", nBuckets),
+      // the default places bucket i at replay position i (timeline
+      // order); a replayOrder permutation stages an OUT-OF-ORDER
+      // landing — bucket replayOrder(p) arrives at position p — the
+      // late-data shape e4l's watermark-drop demonstration needs
+      position = i => if (replayOrder.nonEmpty) replayOrder.indexOf(i) else i) {
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // normalize ts at staging time: buckets always land with a µs
+      // TimestampType column, so the stream side needs no per-fixture
+      // branching and old/new driver fixtures stage identically
+      val raw = graft.Tables.normalizeEventTs(s.read.parquet(src.toString))
+        .withColumn("_ts_us", expr("unix_micros(ts)"))
+      val bounds = raw.agg(min(col("_ts_us")), max(col("_ts_us"))).head()
+      val (tsMin, tsMax) = (bounds.getLong(0), bounds.getLong(1))
+      val span = math.max(1L, tsMax - tsMin + 1)
+      (0 until nBuckets).map { i =>
+        val lo = tsMin + span * i / nBuckets
+        val hi = tsMin + span * (i + 1) / nBuckets
+        raw.where(col("_ts_us") >= lo && col("_ts_us") < hi).drop("_ts_us")
       }
     }
     streamOver(s, landing.toString, filesPerTrigger)
@@ -553,18 +471,12 @@ object EventStreams {
     * idempotence by layout, no transactional sink needed. Returns the
     * number of micro-batches written this invocation. */
   def streamEventsToParquet(s: SparkSession, dir: String, outDir: String): Long = {
-    val ckpt = s"$outDir/_checkpoint"
     var batches = 0L
-    val q = eventsStream(s, dir).writeStream
+    FoldDrain.runToEnd(eventsStream(s, dir).writeStream
       .foreachBatch { (df: DataFrame, id: Long) =>
         df.write.mode("overwrite").parquet(s"$outDir/batch=$id")
         batches += 1
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    StreamBusy.addQuery(q)
+      }, java.nio.file.Paths.get(outDir, "_checkpoint"))
     batches
   }
 
@@ -594,12 +506,10 @@ object EventStreams {
     * answer provably cannot move; nothing ever rescans the base. */
   def e63sStreamIncrAgg(s: SparkSession, dir: String): DataFrame = {
     graft.ops.EventOps.e63Ensure(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e63s", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e63s", dir, "-4")
     // fresh fold per invocation (the e6s stance): a leftover checkpoint
     // would resume a finished stream and fold nothing
-    deleteTree(work)
+    DocStreams.deleteTree(work)
     e63sDrain(s, dir, work)
     e63sResult(s, dir, work)
   }
@@ -664,18 +574,18 @@ object EventStreams {
       .filter(p => foldDirId(p, "batch=").exists(_ <= c) ||
         foldDirId(p, "compact=").exists(_ < c))
       .filterNot(p => spare.contains(p.getFileName.toString))
-      .foreach(deleteTree)
+      .foreach(DocStreams.deleteTree)
     val pending = listFoldDirs(root)
       .filter(p => foldDirId(p, "batch=").exists(b => b > c0 && b < id))
     if (pending.size >= RefreshCompactEvery) {
       val sources = (if (c0 < 0) Nil else Seq(root.resolve(s"compact=$c0")))
         .++(pending).map(_.toString)
       val tmp = root.resolve("_tmp-compact")
-      deleteTree(tmp)
+      DocStreams.deleteTree(tmp)
       merge(s.read.parquet(sources: _*))
         .write.mode("overwrite").parquet(tmp.toString)
       val dst = root.resolve(s"compact=${id - 1}")
-      deleteTree(dst)
+      DocStreams.deleteTree(dst)
       Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
       cleanupCovered(id - 1)
     } else latestFoldCompact(root).foreach(cleanupCovered)
@@ -748,25 +658,20 @@ object EventStreams {
     * checkpoints so listings stay bounded. */
   private[graft] def e63sDrain(s: SparkSession, dir: String,
       work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s, evSrc(dir)) { e63sDrainBody(s, dir, work) }
+    StreamTune.withDrainWidthFrom(s, evSrc(dir)) {
+      FoldDrain.runToEnd(postBoundaryDelta(s, dir).writeStream
+        .foreachBatch { (df: DataFrame, id: Long) =>
+          maybeCompactFolds(s, work.resolve("partials"), id, e63sMerge)
+          e63sFoldBatch(df, id, work)
+        }, work.resolve("ckpt"))
+    }
 
-  private def e63sDrainBody(s: SparkSession, dir: String,
-      work: java.nio.file.Path): Unit = {
-    val delta = eventsStreamBucketed(s, dir, nBuckets = 4)
+  /** The 4-bucket event replay past e63's refresh boundary — the delta
+    * every refresh-fold drain (e63s, e61s, e72) consumes. */
+  private[graft] def postBoundaryDelta(s: SparkSession, dir: String): DataFrame =
+    eventsStreamBucketed(s, dir, nBuckets = 4)
       .where(col("ts") >=
         lit(graft.ops.EventOps.e63Boundary).cast("timestamp"))
-    val q = delta.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        maybeCompactFolds(s, work.resolve("partials"), id, e63sMerge)
-        e63sFoldBatch(df, id, work)
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
 
   /** One micro-batch fold — exposed so the replay spec can invoke a
     * duplicate id directly and prove overwrite idempotence. */
@@ -812,35 +717,21 @@ object EventStreams {
     * the base is never rescanned. */
   def e61sStreamRetention(s: SparkSession, dir: String): DataFrame = {
     graft.ops.EventOps.e61bEnsure(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e61s", graft.util.PathKeys.keyedName(dir) + "-4")
-    deleteTree(work) // fresh fold per invocation (the e6s stance)
+    val work = Staging.keyedDir("stream-e61s", dir, "-4")
+    DocStreams.deleteTree(work) // fresh fold per invocation (the e6s stance)
     e61sDrain(s, dir, work)
     e61sResult(s, dir, work)
   }
 
   private[graft] def e61sDrain(s: SparkSession, dir: String,
       work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s, evSrc(dir)) { e61sDrainBody(s, dir, work) }
-
-  private def e61sDrainBody(s: SparkSession, dir: String,
-      work: java.nio.file.Path): Unit = {
-    val delta = eventsStreamBucketed(s, dir, nBuckets = 4)
-      .where(col("ts") >=
-        lit(graft.ops.EventOps.e63Boundary).cast("timestamp"))
-    val q = delta.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        maybeCompactFolds(s, work.resolve("pairs"), id, _.distinct())
-        e61sFoldBatch(df, id, work)
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+    StreamTune.withDrainWidthFrom(s, evSrc(dir)) {
+      FoldDrain.runToEnd(postBoundaryDelta(s, dir).writeStream
+        .foreachBatch { (df: DataFrame, id: Long) =>
+          maybeCompactFolds(s, work.resolve("pairs"), id, _.distinct())
+          e61sFoldBatch(df, id, work)
+        }, work.resolve("ckpt"))
+    }
 
   /** One micro-batch fold: the batch's distinct activity pairs. */
   private[graft] def e61sFoldBatch(df: DataFrame, id: Long,

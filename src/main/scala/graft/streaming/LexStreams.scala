@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.LexIndex
+import graft.util.Staging
+import SnapshotFolds.{liveDirs, pinnedDirs}
 
 /** INCREMENTAL MAINTENANCE of the inverted text index — the Lucene
   * SEGMENT model, unasked sibling of e2f/e6s: [[LexIndex]] made BM25 a
@@ -90,33 +92,26 @@ object LexStreams {
     StructField("qid", IntegerType), StructField("term", StringType)))
 
   private[graft] def foldBaseDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/documents_lex_fold/${graft.util.PathKeys.keyedName(d)}"
+    Staging.keyedDir("documents_lex_fold", d).toString
+
+  private def docsSrc(d: String): java.nio.file.Path =
+    java.nio.file.Paths.get(d, "documents.parquet")
 
   /** One-time BASE build (doc_id ≥ [[ArrivalDocBound]] only): postings
     * `(tb, term, doc_id, tf, dl)` bucket-partitioned and term-sorted as
     * [[LexIndex]] (dl denormalized, df NOT — see scaladoc), the base df
     * dim, base `(n_docs, sum_dl)` (sum, not avg — additive under
     * arrival merge), and the FROZEN query set ranked by base df. */
-  private[graft] def ensureFoldBase(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "documents.parquet")
-    val sig = // lf3: +per-doc lens dim (tombstone dl resolution, e35d)
-      s"lf3:nb=${LexIndex.NBuckets}:b=$ArrivalDocBound:" +
-      s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
-    val root = foldBaseDir(d)
-    val marker = Paths.get(root, "_STAGED_SIG")
-    val stale = !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
-      DocStreams.deleteTree(Paths.get(root))
-      buildBaseLayout(s, root,
+  private[graft] def ensureFoldBase(s: SparkSession, d: String): Unit =
+    Staging.ensure(java.nio.file.Paths.get(foldBaseDir(d)),
+      // lf3: +per-doc lens dim (tombstone dl resolution, e35d)
+      Staging.sourceSig(docsSrc(d),
+        s"lf3:nb=${LexIndex.NBuckets}:b=$ArrivalDocBound:")) {
+      buildBaseLayout(s, foldBaseDir(d),
         graft.Tables.spreadIfNarrow(graft.Tables.documents(s, d),
             col("doc_id"))
           .where(col("doc_id") >= ArrivalDocBound))
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
-  }
 
   /** The base-layout builder over an arbitrary corpus `docs` — shared
     * by [[ensureFoldBase]] (base = doc_id ≥ bound) and the merge leg
@@ -156,70 +151,34 @@ object LexStreams {
     } finally tf.unpersist(blocking = false)
   }
 
-  /** Landing dirs of the three staged streams — shared by the stagers
-    * and the drains' bounded-batch guard. */
-  private[graft] def arrivalLanding(dir: String, nBuckets: Int): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-docs-arrivals",
-      graft.util.PathKeys.keyedName(dir) + s"-$nBuckets")
-
-  private[graft] def cdcLanding(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-docs-cdc", graft.util.PathKeys.keyedName(dir) + "-4")
-
-  private[graft] def upsertLanding(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-docs-upsert", graft.util.PathKeys.keyedName(dir) + "-4")
-
-  /** Arrival stream: doc_id < [[ArrivalDocBound]] split into id-range
-    * buckets with staggered mtimes (the vecStreamBucketed protocol). */
-  private[graft] def docsArrivalStream(s: SparkSession, dir: String,
-      nBuckets: Int): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val src = Paths.get(dir, "documents.parquet")
-    val landing = arrivalLanding(dir, nBuckets)
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val bucketsPresent = (0 until nBuckets)
-        .forall(i => Files.exists(landing.resolve(f"docs-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !bucketsPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) DocStreams.deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(docsSchema).parquet(src.toString)
-          .where(col("doc_id") < ArrivalDocBound)
-        val tmp = landing.resolve("_tmp")
-        (0 until nBuckets).foreach { i =>
-          val lo = ArrivalDocBound * i / nBuckets
-          val hi = ArrivalDocBound * (i + 1) / nBuckets
-          raw.where(col("doc_id") >= lo && col("doc_id") < hi)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"doc arrival bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"docs-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        DocStreams.deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
+  /** Arrival buckets over `raw`: `key` ∈ [0, `bound`) split into `n`
+    * contiguous ranges — the landing shape both indexes' drains replay. */
+  private[graft] def arrivalParts(raw: DataFrame, key: String, bound: Long,
+      n: Int): Seq[DataFrame] =
+    (0 until n).map { i =>
+      raw.where(col(key) >= bound * i / n && col(key) < bound * (i + 1) / n)
     }
-    s.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
-  }
+
+  /** The CDC landing of both indexes' delete and upsert lifecycles: the
+    * 4 arrival buckets, then the `changes` (delete records or updated
+    * payloads) split at key 24 so they land as micro-batches 4 and 5
+    * and a snapshot can pin BETWEEN them. */
+  private[graft] def cdcParts(raw: DataFrame, key: String, bound: Long,
+      changes: DataFrame): Seq[DataFrame] =
+    arrivalParts(raw, key, bound, 4) ++
+      Seq(changes.where(col(key) < 24), changes.where(col(key) >= 24))
+
+  /** Arrival landing: doc_id < [[ArrivalDocBound]] split into id-range
+    * buckets with staggered mtimes (the [[Staging.stageLanding]] protocol). */
+  private[graft] def arrivalLanding(s: SparkSession, dir: String,
+      nBuckets: Int): java.nio.file.Path =
+    Staging.stageLanding(
+      Staging.keyedDir("stream-docs-arrivals", dir, s"-$nBuckets"),
+      Staging.sourceSig(docsSrc(dir)), Staging.partNames("docs", nBuckets)) {
+      arrivalParts(s.read.schema(docsSchema).parquet(docsSrc(dir).toString)
+        .where(col("doc_id") < ArrivalDocBound), "doc_id", ArrivalDocBound,
+        nBuckets)
+    }
 
   /** BOUNDED-BATCH GUARD (r15 verdict "what's wrong" #1 / ask #5): the
     * driver-side (doc_id, dl) collects in the fold paths are O(|batch|)
@@ -237,8 +196,15 @@ object LexStreams {
       .filter(_ > 0)
       .getOrElse(32L << 20)
 
-  private[graft] def boundedLanding(paths: java.nio.file.Path*): Boolean =
-    StreamTune.sourceBytes(paths: _*) <= BoundedLandingBytes
+  /** The guard's verdict for one drain, decided from the landing the
+    * stager RETURNED: on a first run the landing's bytes exist only once
+    * the stager has written them. */
+  private[graft] final case class LandingGuard(landingBytes: Long) {
+    def bounded: Boolean = landingBytes <= BoundedLandingBytes
+  }
+
+  private[graft] def guardOf(landing: java.nio.file.Path): LandingGuard =
+    LandingGuard(StreamTune.sourceBytes(landing))
 
   /** Write a lens fold from driver rows — the bounded-batch fast path
     * (the rows came off the batch's one bounded collect, so no second
@@ -302,50 +268,23 @@ object LexStreams {
     }
   }
 
+  /** The append drain: the fold loop over BOTH fold trees (the e2z/e72
+    * discipline) — a pinned text-index read needs the postings prefix
+    * AND the doc-length prefix, since statistics at version k are part
+    * of the version. */
   private[graft] def drain(s: SparkSession, d: String,
       work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s,
-      java.nio.file.Paths.get(d, "documents.parquet")) { drainBody(s, d, work) }
-
-  private def drainBody(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit = {
-    val segs = work.resolve("segs")
-    val lens = work.resolve("lens")
-    val q = docsArrivalStream(s, d, nBuckets = 4)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        // manifests on BOTH fold trees (the e2z/e72 discipline): a
-        // pinned text-index read needs the postings prefix AND the
-        // doc-length prefix — statistics at version k are part of the
-        // version. Compaction spares manifest-referenced dirs.
-        EventStreams.maybeCompactFolds(s, segs, id, df => df,
-          spare = SnapshotFolds.retainedRefs(segs))
-        EventStreams.maybeCompactFolds(s, lens, id, df => df,
-          spare = SnapshotFolds.retainedRefs(lens))
-        foldBatch(df, id, work)
-        SnapshotFolds.writeManifest(segs, id)
-        SnapshotFolds.writeManifest(lens, id)
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
-
-  private def foldDirs(root: java.nio.file.Path): Seq[String] =
-    if (java.nio.file.Files.isDirectory(root))
-      EventStreams.foldDirsToRead(root)
-    else Seq.empty[String]
+    FoldDrain.foldAll(s, docsSrc(d), work, Seq("segs", "lens"))(
+      (FoldDrain.replay(s, arrivalLanding(s, d, nBuckets = 4), docsSchema),
+        ())) { _ => foldBatch(_, _, work) }
 
   /** The probe over base + segments: frozen queries, pruned base scan,
     * term-filtered segments, ADDITIVE df/stats merge, top-5. Exposed
     * pre-drain so the visibility spec can probe between folds. */
   private[graft] def probe(s: SparkSession, d: String,
       work: java.nio.file.Path): DataFrame =
-    probeWithDirs(s, foldBaseDir(d), foldDirs(work.resolve("segs")),
-      foldDirs(work.resolve("lens")))
+    probeWithDirs(s, foldBaseDir(d), liveDirs(work.resolve("segs")),
+      liveDirs(work.resolve("lens")))
 
   /** Base-only probe against an ARBITRARY layout root — the merge spec
     * probes the merged base (no segments) through this. */
@@ -359,8 +298,7 @@ object LexStreams {
     val segs = work.resolve("segs")
     val lens = work.resolve("lens")
     probeWithDirs(s, foldBaseDir(d),
-      SnapshotFolds.readManifest(segs, snap).map(n => segs.resolve(n).toString),
-      SnapshotFolds.readManifest(lens, snap).map(n => lens.resolve(n).toString))
+      pinnedDirs(segs, snap), pinnedDirs(lens, snap))
   }
 
   /** The merged (postings, df, stats) relations of base + the given
@@ -445,9 +383,7 @@ object LexStreams {
     * the BASE corpus, every scoring statistic from the WHOLE corpus. */
   def e35fPostingsFold(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35f", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e35f", dir, "-4")
     DocStreams.deleteTree(work)
     drain(s, dir, work)
     probe(s, dir, work)
@@ -480,9 +416,7 @@ object LexStreams {
     * build cost — paid on MEASURED segment mass instead of a timer. */
   def e35gMergeGate(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35g", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e35g", dir, "-4")
     DocStreams.deleteTree(work)
     drain(s, dir, work)
     maybeMerge(s, dir, work) // lifecycle contract; no-op unless tripped
@@ -496,8 +430,8 @@ object LexStreams {
     val baseSt = s.read.schema(statsSchema).parquet(s"$root/stats").select("n_docs")
     val basePost = s.read.schema(basePostSchema).parquet(s"$root/postings")
       .agg(count(lit(1)).as("n_base_postings"))
-    val lensDirs = foldDirs(work.resolve("lens"))
-    val segDirs = foldDirs(work.resolve("segs"))
+    val lensDirs = liveDirs(work.resolve("lens"))
+    val segDirs = liveDirs(work.resolve("segs"))
     require(segDirs.nonEmpty, s"merge gate needs folded segments under $work")
     val arrDocs = s.read.schema(lensSchema).parquet(lensDirs: _*)
       .agg(count(lit(1)).as("n_arr_docs"))
@@ -556,9 +490,7 @@ object LexStreams {
     * current-stats score of a pinned posting set is a hash miss. */
   def e35zLexSnapshot(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35z", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e35z", dir, "-4")
     DocStreams.deleteTree(work)
     drain(s, dir, work)
     probeAtSnapshot(s, dir, work, DeclaredLexSnap)
@@ -589,9 +521,7 @@ object LexStreams {
     * segments vs 1 for SCALE.md. */
   def e35tTierMerge(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35t", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e35t", dir, "-4")
     DocStreams.deleteTree(work)
     drain(s, dir, work)
     EventStreams.maybeTierMerge(s, work.resolve("segs"))
@@ -614,65 +544,22 @@ object LexStreams {
     id % TombMod === TombRes && id < TombBound
 
   /** CDC staging for the delete lifecycle: the 4 arrival buckets of
-    * [[docsArrivalStream]] plus 2 DELETE buckets — CDC-style delete
+    * [[arrivalLanding]] plus 2 DELETE buckets — CDC-style delete
     * records (key present, payload NULL), split by doc_id < 24 /
     * ≥ 24 so deletes land as two separate micro-batches (4 and 5) and
     * a snapshot can pin BETWEEN them. */
-  private[graft] def cdcDocsStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val nArr = 4
-    val src = Paths.get(dir, "documents.parquet")
-    val landing = cdcLanding(dir)
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"c1:${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val nFiles = nArr + 2
-      val filesPresent = (0 until nFiles)
-        .forall(i => Files.exists(landing.resolve(f"cdc-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !filesPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) DocStreams.deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(docsSchema).parquet(src.toString)
-        val tmp = landing.resolve("_tmp")
-        def stage(i: Int, rows: DataFrame): Unit = {
-          rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"cdc bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"cdc-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        (0 until nArr).foreach { i =>
-          val lo = ArrivalDocBound * i / nArr
-          val hi = ArrivalDocBound * (i + 1) / nArr
-          stage(i, raw.where(col("doc_id") >= lo && col("doc_id") < hi))
-        }
-        // delete records: key present, payload NULL (the CDC shape)
-        val dels = raw.where(tombPred(col("doc_id")))
-          .select(col("doc_id"),
-            lit(null).cast("string").as("text"),
-            lit(null).cast("string").as("lang"),
-            lit(null).cast("string").as("source"),
-            lit(null).cast("long").as("n_chars"))
-        stage(nArr, dels.where(col("doc_id") < 24))
-        stage(nArr + 1, dels.where(col("doc_id") >= 24))
-        DocStreams.deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
+  private[graft] def cdcLanding(s: SparkSession, dir: String): java.nio.file.Path =
+    Staging.stageLanding(Staging.keyedDir("stream-docs-cdc", dir, "-4"),
+      Staging.sourceSig(docsSrc(dir), "c1:"), Staging.partNames("cdc", 6)) {
+      val raw = s.read.schema(docsSchema).parquet(docsSrc(dir).toString)
+      // delete records: key present, payload NULL (the CDC shape)
+      cdcParts(raw, "doc_id", ArrivalDocBound, raw.where(tombPred(col("doc_id")))
+        .select(col("doc_id"),
+          lit(null).cast("string").as("text"),
+          lit(null).cast("string").as("lang"),
+          lit(null).cast("string").as("source"),
+          lit(null).cast("long").as("n_chars")))
     }
-    s.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
-  }
 
   /** One CDC micro-batch fold: upserts (payload present) take the
     * ordinary [[foldBatch]] path; delete records resolve their doc's
@@ -697,7 +584,7 @@ object LexStreams {
     // keys — a pushed In on the bounded path, a semi-join on the
     // distributed fallback.
     def livePriors(restrict: DataFrame => DataFrame): DataFrame = {
-      val lensDirs = foldDirs(work.resolve("lens"))
+      val lensDirs = liveDirs(work.resolve("lens"))
       val baseLens = s.read.schema(lensSchema).parquet(s"$baseRoot/lens")
         .withColumn("ver", lit(-1L))
       val allLens = if (lensDirs.isEmpty) baseLens
@@ -705,7 +592,7 @@ object LexStreams {
           s.read.schema(lensSchema).parquet(lensDirs: _*)
             .withColumn("ver", lit(0L)))
       val restricted = restrict(allLens)
-      val tombDirs = foldDirs(work.resolve("tombs"))
+      val tombDirs = liveDirs(work.resolve("tombs"))
       val live = if (tombDirs.isEmpty) restricted else {
         val t = versionedTombs(s, tombDirs)
           .select(col("doc_id").as("t_doc"), col("upto"))
@@ -769,34 +656,16 @@ object LexStreams {
     }
   }
 
-  private[graft] def cdcDrain(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s,
-      java.nio.file.Paths.get(d, "documents.parquet")) { cdcDrainBody(s, d, work) }
+  /** The fold trees of the delete and upsert lifecycles. */
+  private val VersionedTrees = Seq("segs", "lens", "tombs")
 
-  private def cdcDrainBody(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit = {
-    val trees = Seq("segs", "lens", "tombs").map(work.resolve)
-    trees.foreach(java.nio.file.Files.createDirectories(_))
-    val root = foldBaseDir(d)
-    val bounded = boundedLanding(cdcLanding(d))
-    val q = cdcDocsStream(s, d)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        trees.foreach { t =>
-          EventStreams.maybeCompactFolds(s, t, id, df => df,
-            spare = SnapshotFolds.retainedRefs(t))
-        }
-        cdcFoldBatch(s, df, id, work, root, bounded)
-        trees.foreach(SnapshotFolds.writeManifest(_, id))
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+  /** The CDC drain; returns the bounded-batch guard it folded under. */
+  private[graft] def cdcDrain(s: SparkSession, d: String,
+      work: java.nio.file.Path): LandingGuard =
+    FoldDrain.foldAll(s, docsSrc(d), work, VersionedTrees) {
+      val landing = cdcLanding(s, d)
+      (FoldDrain.replay(s, landing, docsSchema), guardOf(landing))
+    } { g => cdcFoldBatch(s, _, _, work, foldBaseDir(d), g.bounded) }
 
   /** The TOMBSTONE-AWARE probe: live postings = (base ∪ segments)
     * ANTI-JOINED against the broadcast tombstone set; df for the query
@@ -817,8 +686,8 @@ object LexStreams {
 
   private[graft] def tombProbe(s: SparkSession, d: String,
       work: java.nio.file.Path): DataFrame =
-    probeWithTombs(s, foldBaseDir(d), foldDirs(work.resolve("segs")),
-      foldDirs(work.resolve("lens")), foldDirs(work.resolve("tombs")))
+    probeWithTombs(s, foldBaseDir(d), liveDirs(work.resolve("segs")),
+      liveDirs(work.resolve("lens")), liveDirs(work.resolve("tombs")))
 
   /** The tombstone probe AT a pinned snapshot: all THREE fold trees
     * resolve through their `snap` manifests — a doc deleted at batch k
@@ -837,7 +706,7 @@ object LexStreams {
     * deleted with the covered segments in a real lifecycle step. */
   private[graft] def mergeIntoBaseLive(s: SparkSession, d: String,
       work: java.nio.file.Path): java.nio.file.Path = {
-    val tombDirs = foldDirs(work.resolve("tombs"))
+    val tombDirs = liveDirs(work.resolve("tombs"))
     val tombIds =
       if (tombDirs.isEmpty) Array.empty[Long]
       else s.read.schema(tombSchema).parquet(tombDirs: _*)
@@ -878,9 +747,7 @@ object LexStreams {
     * the corpus until the merge the lifecycle was already paying. */
   def e35dLexTombstone(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35d", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e35d", dir, "-4")
     DocStreams.deleteTree(work)
     cdcDrain(s, dir, work)
     tombProbe(s, dir, work)
@@ -916,58 +783,15 @@ object LexStreams {
     * two separate micro-batches (4 and 5) and a snapshot can pin
     * BETWEEN them (batch-4 updates applied, batch-5 docs still at
     * their original version). */
-  private[graft] def cdcUpsertDocsStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val nArr = 4
-    val src = Paths.get(dir, "documents.parquet")
-    val landing = upsertLanding(dir)
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"u1:${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val nFiles = nArr + 2
-      val filesPresent = (0 until nFiles)
-        .forall(i => Files.exists(landing.resolve(f"upd-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !filesPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) DocStreams.deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(docsSchema).parquet(src.toString)
-        val tmp = landing.resolve("_tmp")
-        def stage(i: Int, rows: DataFrame): Unit = {
-          rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"upsert bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"upd-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        (0 until nArr).foreach { i =>
-          val lo = ArrivalDocBound * i / nArr
-          val hi = ArrivalDocBound * (i + 1) / nArr
-          stage(i, raw.where(col("doc_id") >= lo && col("doc_id") < hi))
-        }
-        // re-arrivals with the NEW payload (n_chars rides unchanged —
-        // the fold never reads it; text is the indexed payload)
-        val upds = raw.where(updPred(col("doc_id")))
-          .withColumn("text", updatedText(col("text")))
-        stage(nArr, upds.where(col("doc_id") < 24))
-        stage(nArr + 1, upds.where(col("doc_id") >= 24))
-        DocStreams.deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
+  private[graft] def upsertLanding(s: SparkSession, dir: String): java.nio.file.Path =
+    Staging.stageLanding(Staging.keyedDir("stream-docs-upsert", dir, "-4"),
+      Staging.sourceSig(docsSrc(dir), "u1:"), Staging.partNames("upd", 6)) {
+      val raw = s.read.schema(docsSchema).parquet(docsSrc(dir).toString)
+      // re-arrivals with the NEW payload (n_chars rides unchanged —
+      // the fold never reads it; text is the indexed payload)
+      cdcParts(raw, "doc_id", ArrivalDocBound, raw.where(updPred(col("doc_id")))
+        .withColumn("text", updatedText(col("text"))))
     }
-    s.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
-  }
 
   /** One UPSERT micro-batch fold — Lucene's updateDocument = DELETE
     * any prior version of the key, then ADD the new one, atomically
@@ -1008,14 +832,14 @@ object LexStreams {
     // again, or its statistics weight would subtract twice (the
     // delete-then-re-add double-subtract, spec-pinned).
     def latestPriors(restrict: DataFrame => DataFrame): DataFrame = {
-      val lensDirs = foldDirs(work.resolve("lens"))
+      val lensDirs = liveDirs(work.resolve("lens"))
       val baseLens = s.read.schema(lensSchema).parquet(s"$baseRoot/lens")
         .withColumn("ver", lit(-1L))
       val allLens = if (lensDirs.isEmpty) baseLens
         else baseLens.unionByName(
           s.read.schema(lensVerSchema).parquet(lensDirs: _*))
       val preBatch = restrict(allLens).where(col("ver") < id)
-      val tombDirs = foldDirs(work.resolve("tombs"))
+      val tombDirs = liveDirs(work.resolve("tombs"))
       val live = if (tombDirs.isEmpty) preBatch else {
         val t = versionedTombs(s, tombDirs)
           .select(col("doc_id").as("t_doc"), col("upto"))
@@ -1095,34 +919,13 @@ object LexStreams {
     }
   }
 
+  /** The upsert drain; returns the bounded-batch guard it folded under. */
   private[graft] def upsertDrain(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s,
-      java.nio.file.Paths.get(d, "documents.parquet")) { upsertDrainBody(s, d, work) }
-
-  private def upsertDrainBody(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit = {
-    val trees = Seq("segs", "lens", "tombs").map(work.resolve)
-    trees.foreach(java.nio.file.Files.createDirectories(_))
-    val root = foldBaseDir(d)
-    val bounded = boundedLanding(upsertLanding(d))
-    val q = cdcUpsertDocsStream(s, d)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        trees.foreach { t =>
-          EventStreams.maybeCompactFolds(s, t, id, df => df,
-            spare = SnapshotFolds.retainedRefs(t))
-        }
-        upsertFoldBatch(s, df, id, work, root, bounded)
-        trees.foreach(SnapshotFolds.writeManifest(_, id))
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+      work: java.nio.file.Path): LandingGuard =
+    FoldDrain.foldAll(s, docsSrc(d), work, VersionedTrees) {
+      val landing = upsertLanding(s, d)
+      (FoldDrain.replay(s, landing, docsSchema), guardOf(landing))
+    } { g => upsertFoldBatch(s, _, _, work, foldBaseDir(d), g.bounded) }
 
   /** The VERSION-AWARE probe: live postings = (base at ver −1 ∪
     * segments) anti-joined against the broadcast tombstone set on
@@ -1207,8 +1010,8 @@ object LexStreams {
 
   private[graft] def upsertProbe(s: SparkSession, d: String,
       work: java.nio.file.Path): DataFrame =
-    probeWithVersions(s, foldBaseDir(d), foldDirs(work.resolve("segs")),
-      foldDirs(work.resolve("lens")), foldDirs(work.resolve("tombs")))
+    probeWithVersions(s, foldBaseDir(d), liveDirs(work.resolve("segs")),
+      liveDirs(work.resolve("lens")), liveDirs(work.resolve("tombs")))
 
   /** The version-aware probe AT a pinned snapshot: all three fold
     * trees resolve through their `snap` manifests — a doc updated at
@@ -1216,10 +1019,7 @@ object LexStreams {
     * weight) at snapshots < k. */
   private[graft] def upsertProbeAtSnapshot(s: SparkSession, d: String,
       work: java.nio.file.Path, snap: Long): DataFrame = {
-    def pinned(tree: String) = {
-      val t = work.resolve(tree)
-      SnapshotFolds.readManifest(t, snap).map(n => t.resolve(n).toString)
-    }
+    def pinned(tree: String) = pinnedDirs(work.resolve(tree), snap)
     probeWithVersions(s, foldBaseDir(d), pinned("segs"), pinned("lens"),
       pinned("tombs"))
   }
@@ -1239,9 +1039,9 @@ object LexStreams {
     val root = foldBaseDir(d)
     val dst = work.resolve("merged")
     DocStreams.deleteTree(dst)
-    val segDirs = foldDirs(work.resolve("segs"))
-    val lensDirs = foldDirs(work.resolve("lens"))
-    val tombDirs = foldDirs(work.resolve("tombs"))
+    val segDirs = liveDirs(work.resolve("segs"))
+    val lensDirs = liveDirs(work.resolve("lens"))
+    val tombDirs = liveDirs(work.resolve("tombs"))
     val tombs = (if (tombDirs.isEmpty)
         Seq.empty[(Long, Int, Long)].toDF("doc_id", "dl", "upto")
       else s.read.parquet(tombDirs: _*)).distinct()
@@ -1319,9 +1119,7 @@ object LexStreams {
     * document (spec-pinned: merged-base probe ≡ the live probe). */
   def e35uLexUpsert(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35u", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e35u", dir, "-4")
     DocStreams.deleteTree(work)
     upsertDrain(s, dir, work)
     upsertProbe(s, dir, work)

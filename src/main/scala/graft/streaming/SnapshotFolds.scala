@@ -106,6 +106,15 @@ object SnapshotFolds {
     else dirs.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
   }
 
+  /** A fold tree's CURRENT read set — empty before its first batch
+    * created the tree (a probe then reads the base alone). */
+  private[graft] def liveDirs(root: Path): Seq[String] =
+    if (Files.isDirectory(root)) EventStreams.foldDirsToRead(root) else Nil
+
+  /** The dirs snapshot `snap` pinned in the tree at `root`. */
+  private[graft] def pinnedDirs(root: Path, snap: Long): Seq[String] =
+    readManifest(root, snap).map(root.resolve(_).toString)
+
   /** Every dir name a RETAINED manifest references — the compaction
     * cleanup's spare set. */
   private[graft] def retainedRefs(root: Path): Set[String] =
@@ -117,33 +126,18 @@ object SnapshotFolds {
     * compaction or later batch that landed since. */
   private[graft] def readAtSnapshot(s: SparkSession, root: Path,
       snap: Long): DataFrame = {
-    val dirs = readManifest(root, snap).map(root.resolve(_).toString)
-    EventStreams.e63sMerge(s.read.parquet(dirs: _*))
+    EventStreams.e63sMerge(s.read.parquet(pinnedDirs(root, snap): _*))
   }
 
-  /** The e63s drain with manifests: identical fold + compaction calls,
-    * plus one manifest write per batch (after its fold lands — the
-    * manifest names only durable dirs) and retention-aware cleanup. */
-  private[graft] def e72Drain(s: SparkSession, dir: String,
-      work: Path): Unit = {
-    val partials = work.resolve("partials")
-    val delta = EventStreams.eventsStreamBucketed(s, dir, nBuckets = 4)
-      .where(col("ts") >=
-        lit(graft.ops.EventOps.e63Boundary).cast("timestamp"))
-    val q = delta.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        EventStreams.maybeCompactFolds(s, partials, id,
-          EventStreams.e63sMerge, spare = retainedRefs(partials))
-        EventStreams.e63sFoldBatch(df, id, work)
-        writeManifest(partials, id)
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+  /** The e63s drain with manifests: the fold loop ([[FoldDrain]]) over
+    * the `partials` tree — e63s's fold and re-merge, plus one manifest
+    * per batch and retention-aware cleanup. */
+  private[graft] def e72Drain(s: SparkSession, dir: String, work: Path): Unit =
+    FoldDrain.foldAll(s, Paths.get(dir, "events.parquet"), work,
+      Seq("partials"), EventStreams.e63sMerge)(
+      (EventStreams.postBoundaryDelta(s, dir), ())) { _ =>
+      EventStreams.e63sFoldBatch(_, _, work)
+    }
 
   /** E72: READ-AT-SNAPSHOT over the manifested fold. Drains the
     * 4-bucket post-boundary delta (batches 0..3; the batch-3 step also
@@ -157,14 +151,11 @@ object SnapshotFolds {
     * deterministic time-range buckets. */
   def e72SnapshotRead(s: SparkSession, dir: String): DataFrame = {
     graft.ops.EventOps.e63Ensure(s, dir)
-    val work = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e72", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = graft.util.Staging.keyedDir("stream-e72", dir, "-4")
     // fresh fold per invocation (the e6s stance): a leftover checkpoint
     // would resume a finished stream and fold nothing
     DocStreams.deleteTree(work)
-    StreamTune.withDrainWidthFrom(s,
-      Paths.get(dir, "events.parquet")) { e72Drain(s, dir, work) }
+    e72Drain(s, dir, work)
     val state = s.read.parquet(graft.ops.EventOps.e63StateDir(dir))
     graft.ops.EventOps.e63Rollup(
         state.unionByName(readAtSnapshot(s, work.resolve("partials"), DeclaredSnap)))

@@ -6,6 +6,8 @@ import org.apache.spark.sql.types._
 
 import graft.ops.SimOps
 import graft.sources.IvfServe
+import graft.util.Staging
+import SnapshotFolds.{liveDirs, pinnedDirs}
 
 /** INCREMENTAL MAINTENANCE of the trained IVF layout (r11 verdict ask
   * #3): e6s grows the LSH band index per micro-batch, but nothing
@@ -55,80 +57,46 @@ object VecStreams {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
+  /** Fold-tree schemas, explicit (the LexStreams discipline): a
+    * schema-less read infers from ONE file's footer — a footer job per
+    * read, and a tree mixing `ver`-less and versioned dirs would take
+    * whichever schema that file carries. `ver`/`upto` are nullable and
+    * normalized at read ([[versionedFolds]] / [[versionedTombs]]). */
+  private val foldVerSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType), StructField("label", IntegerType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("cell", IntegerType), StructField("ver", LongType)))
+  private val tombSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType), StructField("upto", LongType)))
+
   private[graft] def foldBaseDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/embeddings_ivf_fold/${graft.util.PathKeys.keyedName(d)}"
+    Staging.keyedDir("embeddings_ivf_fold", d).toString
+
+  private def embSrc(d: String): java.nio.file.Path =
+    java.nio.file.Paths.get(d, "embeddings.parquet")
 
   /** One-time base build: train on vec_id ≥ [[ArrivalBound]] only —
     * the corpus that existed before the arrivals — and persist
     * centroids + base lists (the [[IvfServe]] build leg). */
-  private[graft] def ensureFoldBase(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "embeddings.parquet")
-    val sig = s"f4:k=${IvfServe.K}:b=$ArrivalBound:" + // f4: PQ codes encode residuals
-      s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
-    val root = foldBaseDir(d)
-    val marker = Paths.get(root, "_STAGED_SIG")
-    val stale = !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
-      DocStreams.deleteTree(Paths.get(root))
-      IvfServe.buildTrainedLayout(s, root,
+  private[graft] def ensureFoldBase(s: SparkSession, d: String): Unit =
+    Staging.ensure(java.nio.file.Paths.get(foldBaseDir(d)),
+      // f4: PQ codes encode residuals
+      Staging.sourceSig(embSrc(d), s"f4:k=${IvfServe.K}:b=$ArrivalBound:")) {
+      IvfServe.buildTrainedLayout(s, foldBaseDir(d),
         IvfServe.corpusView(s, d).where(col("vec_id") >= ArrivalBound))
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
-  }
 
   /** Bucketed staging for the ARRIVING vectors: vec_id <
     * [[ArrivalBound]] split into `nBuckets` contiguous-range files
     * with staggered mtimes (the docsStreamBucketed protocol). */
-  private[graft] def vecStreamBucketed(s: SparkSession, dir: String,
-      nBuckets: Int): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val src = Paths.get(dir, "embeddings.parquet")
-    val landing = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-vecs-bucketed",
-      graft.util.PathKeys.keyedName(dir) + s"-$nBuckets")
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val bucketsPresent = (0 until nBuckets)
-        .forall(i => Files.exists(landing.resolve(f"vecs-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !bucketsPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) DocStreams.deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(embSchema).parquet(src.toString)
-          .where(col("vec_id") < ArrivalBound)
-        val tmp = landing.resolve("_tmp")
-        (0 until nBuckets).foreach { i =>
-          val lo = ArrivalBound * i / nBuckets
-          val hi = ArrivalBound * (i + 1) / nBuckets
-          raw.where(col("vec_id") >= lo && col("vec_id") < hi)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"vec bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"vecs-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        DocStreams.deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
+  private[graft] def arrivalLanding(s: SparkSession, dir: String,
+      nBuckets: Int): java.nio.file.Path =
+    Staging.stageLanding(
+      Staging.keyedDir("stream-vecs-bucketed", dir, s"-$nBuckets"),
+      Staging.sourceSig(embSrc(dir)), Staging.partNames("vecs", nBuckets)) {
+      LexStreams.arrivalParts(s.read.schema(embSchema).parquet(embSrc(dir).toString)
+        .where(col("vec_id") < ArrivalBound), "vec_id", ArrivalBound, nBuckets)
     }
-    s.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
-  }
 
   /** One micro-batch fold: assign the batch under the FROZEN trained
     * centroids, write to its own overwrite dir — exposed so the
@@ -141,39 +109,20 @@ object VecStreams {
       .write.mode("overwrite")
       .parquet(work.resolve(s"folds/batch=$id").toString)
 
+  /** The append drain: the fold loop over the `folds` tree, with
+    * concatenation as the re-merge (fold rows are a vec_id-keyed set, so
+    * compaction relocates and never re-aggregates). Every batch stamps
+    * a manifest of the live read set (r13 ask #5 — the e72 discipline on
+    * the VECTOR folds): "probe the index as of batch k" stays
+    * answerable after compaction for the retention window, which is the
+    * reproducibility a training run needs when its eval set was
+    * retrieved at a pinned index version. */
   private[graft] def e2fDrain(s: SparkSession, d: String,
       work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s,
-      java.nio.file.Paths.get(d, "embeddings.parquet")) { e2fDrainBody(s, d, work) }
-
-  private def e2fDrainBody(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit = {
-    val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
-    val foldRoot = work.resolve("folds")
-    val q = vecStreamBucketed(s, d, nBuckets = 4)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        // concatenation as the re-merge: fold rows are a vec_id-keyed
-        // set, so compaction relocates and never re-aggregates. Covered
-        // dirs a retained snapshot manifest still references are SPARED
-        // from cleanup, and every batch stamps a manifest of the live
-        // read set (r13 ask #5 — the e72 discipline on the VECTOR
-        // folds): "probe the index as of batch k" stays answerable
-        // after compaction for the retention window, which is the
-        // reproducibility a training run needs when its eval set was
-        // retrieved at a pinned index version.
-        EventStreams.maybeCompactFolds(s, foldRoot, id, df => df,
-          spare = SnapshotFolds.retainedRefs(foldRoot))
-        e2fFoldBatch(df, id, cents, work)
-        SnapshotFolds.writeManifest(foldRoot, id)
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+    FoldDrain.foldAll(s, embSrc(d), work, Seq("folds")) {
+      val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
+      (FoldDrain.replay(s, arrivalLanding(s, d, nBuckets = 4), embSchema), cents)
+    } { cents => e2fFoldBatch(_, _, cents, work) }
 
   /** The probe's scored candidate relation (pre-top-k) — exposed so
     * E2fStreamSpec can assert ARRIVAL VISIBILITY exactly: a folded
@@ -216,12 +165,8 @@ object VecStreams {
     * than one drift-fattened frozen cell. */
   private[graft] def multiprobeCandidatesAt(s: SparkSession, root: String,
       foldRootOpt: Option[java.nio.file.Path], d: String, nprobe: Int): DataFrame = {
-    val foldDirsIn = foldRootOpt.toSeq.flatMap { foldRoot =>
-      if (java.nio.file.Files.isDirectory(foldRoot))
-        EventStreams.foldDirsToRead(foldRoot)
-      else Seq.empty[String]
-    }
-    multiprobeCandidatesWithDirs(s, root, foldDirsIn, d, nprobe)
+    multiprobeCandidatesWithDirs(s, root, foldRootOpt.toSeq.flatMap(liveDirs),
+      d, nprobe)
   }
 
   /** The multiprobe scored relation against an EXPLICIT fold-dir list
@@ -246,12 +191,7 @@ object VecStreams {
       cells: Seq[Int]): DataFrame = {
     // a probe BEFORE the first arrival batch: base-only (the dir does
     // not exist yet — the e63sResult empty-delta convention)
-    val foldDirs = foldRootOpt.toSeq.flatMap { foldRoot =>
-      if (java.nio.file.Files.isDirectory(foldRoot))
-        EventStreams.foldDirsToRead(foldRoot)
-      else Seq.empty[String]
-    }
-    scoredWithDirs(s, root, foldDirs, q, cells)
+    scoredWithDirs(s, root, foldRootOpt.toSeq.flatMap(liveDirs), q, cells)
   }
 
   /** The probe's scored relation against an EXPLICIT fold-dir list —
@@ -288,9 +228,7 @@ object VecStreams {
     * replay with the base/arrival split (see ivfServeOracleSql). */
   def e2fIvfFoldStream(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2f", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e2f", dir, "-4")
     DocStreams.deleteTree(work)
     e2fDrain(s, dir, work)
     e2fProbe(s, dir, work)
@@ -333,9 +271,7 @@ object VecStreams {
     * the gate is paying it on MEASURED drift instead of on a timer. */
   def e2gDriftGate(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2g", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e2g", dir, "-4")
     DocStreams.deleteTree(work)
     e2fDrain(s, dir, work)
     maybeRestage(s, dir, work) // the lifecycle contract; no-op unless tripped
@@ -350,10 +286,7 @@ object VecStreams {
     val base = s.read.parquet(s"$root/lists")
       .groupBy("cell").agg(count(lit(1)).as("n_base"))
     val foldRoot = work.resolve("folds")
-    val foldDirs =
-      if (java.nio.file.Files.isDirectory(foldRoot))
-        EventStreams.foldDirsToRead(foldRoot)
-      else Seq.empty[String]
+    val foldDirs = liveDirs(foldRoot)
     require(foldDirs.nonEmpty, s"drift gate needs folded arrivals under $foldRoot")
     val arr = s.read.parquet(foldDirs: _*)
       .groupBy("cell").agg(count(lit(1)).as("n_arr"))
@@ -414,9 +347,7 @@ object VecStreams {
     * the retention window, never history. */
   def e2zFoldSnapshot(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2z", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e2z", dir, "-4")
     DocStreams.deleteTree(work)
     e2fDrain(s, dir, work)
     SimOps.topK(candidatesAtSnapshot(s, dir, work, DeclaredVecSnap), 3)
@@ -429,10 +360,7 @@ object VecStreams {
       work: java.nio.file.Path, snap: Long): DataFrame = {
     val root = foldBaseDir(d)
     val (q, cells) = routedQueriesAt(s, root, d)
-    val foldRoot = work.resolve("folds")
-    val dirs = SnapshotFolds.readManifest(foldRoot, snap)
-      .map(n => foldRoot.resolve(n).toString)
-    scoredWithDirs(s, root, dirs, q, cells)
+    scoredWithDirs(s, root, pinnedDirs(work.resolve("folds"), snap), q, cells)
   }
 
   /** The rebuild leg: retrain the full layout (coarse quantizer AND
@@ -459,69 +387,20 @@ object VecStreams {
   private[graft] def vecTombPred(id: org.apache.spark.sql.Column) =
     id % LexStreams.TombMod === LexStreams.TombRes && id < LexStreams.TombBound
 
-  /** Landing of the CDC vector stream — shared by the stager and the
-    * drain's bounded-batch guard. */
-  private[graft] def vecCdcLanding(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-vecs-cdc", graft.util.PathKeys.keyedName(dir) + "-4")
-
   /** CDC staging: the 4 arrival buckets plus 2 DELETE buckets (key
     * present, embedding NULL — the CDC delete record), split by
     * vec_id < 24 / ≥ 24 so deletes land as batches 4 and 5 and a
     * snapshot can pin between them. */
-  private[graft] def cdcVecStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val nArr = 4
-    val src = Paths.get(dir, "embeddings.parquet")
-    val landing = vecCdcLanding(dir)
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"c1:${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val nFiles = nArr + 2
-      val filesPresent = (0 until nFiles)
-        .forall(i => Files.exists(landing.resolve(f"cdc-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !filesPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) DocStreams.deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(embSchema).parquet(src.toString)
-        val tmp = landing.resolve("_tmp")
-        def stage(i: Int, rows: DataFrame): Unit = {
-          rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"vec cdc bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"cdc-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        (0 until nArr).foreach { i =>
-          val lo = ArrivalBound * i / nArr
-          val hi = ArrivalBound * (i + 1) / nArr
-          stage(i, raw.where(col("vec_id") >= lo && col("vec_id") < hi))
-        }
-        val dels = raw.where(vecTombPred(col("vec_id")))
+  private[graft] def cdcLanding(s: SparkSession, dir: String): java.nio.file.Path =
+    Staging.stageLanding(Staging.keyedDir("stream-vecs-cdc", dir, "-4"),
+      Staging.sourceSig(embSrc(dir), "c1:"), Staging.partNames("cdc", 6)) {
+      val raw = s.read.schema(embSchema).parquet(embSrc(dir).toString)
+      LexStreams.cdcParts(raw, "vec_id", ArrivalBound,
+        raw.where(vecTombPred(col("vec_id")))
           .select(col("vec_id"),
             lit(null).cast("array<float>").as("embedding"),
-            lit(null).cast("int").as("label"))
-        stage(nArr, dels.where(col("vec_id") < 24))
-        stage(nArr + 1, dels.where(col("vec_id") >= 24))
-        DocStreams.deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
+            lit(null).cast("int").as("label")))
     }
-    s.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
-  }
 
   /** One CDC micro-batch fold: upserts assign under the frozen
     * quantizer ([[e2fFoldBatch]]); delete records land as a tombstone
@@ -569,34 +448,17 @@ object VecStreams {
     }
   }
 
-  private[graft] def cdcVecDrain(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s,
-      java.nio.file.Paths.get(d, "embeddings.parquet")) { cdcVecDrainBody(s, d, work) }
+  /** The fold trees of the delete and upsert lifecycles. */
+  private val VersionedTrees = Seq("folds", "tombs")
 
-  private def cdcVecDrainBody(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit = {
-    val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
-    val trees = Seq("folds", "tombs").map(work.resolve)
-    trees.foreach(java.nio.file.Files.createDirectories(_))
-    val bounded = LexStreams.boundedLanding(vecCdcLanding(d))
-    val q = cdcVecStream(s, d)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        trees.foreach { t =>
-          EventStreams.maybeCompactFolds(s, t, id, df => df,
-            spare = SnapshotFolds.retainedRefs(t))
-        }
-        cdcVecFoldBatch(df, id, cents, work, bounded)
-        trees.foreach(SnapshotFolds.writeManifest(_, id))
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+  /** The CDC drain; returns the bounded-batch guard it folded under. */
+  private[graft] def cdcVecDrain(s: SparkSession, d: String,
+      work: java.nio.file.Path): LexStreams.LandingGuard =
+    FoldDrain.foldAll(s, embSrc(d), work, VersionedTrees) {
+      val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
+      val landing = cdcLanding(s, d)
+      (FoldDrain.replay(s, landing, embSchema), (cents, LexStreams.guardOf(landing)))
+    } { case (cents, g) => cdcVecFoldBatch(_, _, cents, work, g.bounded) }._2
 
   /** The live-docs candidate relation: the e2f probe's scored rows
     * anti-joined against the broadcast tombstone set (deduped by
@@ -609,12 +471,6 @@ object VecStreams {
     // version-less delete trees normalize to ver 0 / upto +∞ inside
     // the shared version-aware relation (the LexStreams discipline)
     upsertCandidatesWithDirs(s, d, foldDirsIn, tombDirs)
-
-  private def treeDirs(work: java.nio.file.Path, tree: String): Seq[String] = {
-    val t = work.resolve(tree)
-    if (java.nio.file.Files.isDirectory(t)) EventStreams.foldDirsToRead(t)
-    else Seq.empty[String]
-  }
 
   /** The tombstone probe AT a pinned snapshot: BOTH trees resolve
     * through their manifests — a vector deleted at batch k stays a
@@ -631,7 +487,7 @@ object VecStreams {
     * live-docs set. */
   private[graft] def restageLive(s: SparkSession, d: String,
       work: java.nio.file.Path): java.nio.file.Path = {
-    val tombDirs = treeDirs(work, "tombs")
+    val tombDirs = liveDirs(work.resolve("tombs"))
     val tombIds =
       if (tombDirs.isEmpty) Array.empty[Long]
       else s.read.parquet(tombDirs: _*).select("vec_id").distinct()
@@ -666,13 +522,11 @@ object VecStreams {
     * restage the lifecycle was already paying. */
   def e2dVecTombstone(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2d", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e2d", dir, "-4")
     DocStreams.deleteTree(work)
     cdcVecDrain(s, dir, work)
     SimOps.topK(tombCandidatesWithDirs(s, dir,
-      treeDirs(work, "folds"), treeDirs(work, "tombs")), 3)
+      liveDirs(work.resolve("folds")), liveDirs(work.resolve("tombs"))), 3)
   }
 
   // ───────────────────────── upserts (e2u) ────────────────────────────
@@ -698,58 +552,14 @@ object VecStreams {
     * 2 UPDATE buckets re-arriving the declared set with the NEW
     * payload, split by vec_id < 24 / ≥ 24 (batches 4 and 5) so a
     * snapshot can pin between them. */
-  private[graft] def cdcUpsertVecStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val nArr = 4
-    val src = Paths.get(dir, "embeddings.parquet")
-    val landing = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-vecs-upsert", graft.util.PathKeys.keyedName(dir) + s"-$nArr")
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"u1:${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val nFiles = nArr + 2
-      val filesPresent = (0 until nFiles)
-        .forall(i => Files.exists(landing.resolve(f"upd-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !filesPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) DocStreams.deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(embSchema).parquet(src.toString)
-        val tmp = landing.resolve("_tmp")
-        def stage(i: Int, rows: DataFrame): Unit = {
-          rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"vec upsert bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"upd-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        (0 until nArr).foreach { i =>
-          val lo = ArrivalBound * i / nArr
-          val hi = ArrivalBound * (i + 1) / nArr
-          stage(i, raw.where(col("vec_id") >= lo && col("vec_id") < hi))
-        }
-        val upds = raw.where(vecUpdPred(col("vec_id")))
-          .withColumn("embedding", updatedVec(col("embedding")))
-        stage(nArr, upds.where(col("vec_id") < 24))
-        stage(nArr + 1, upds.where(col("vec_id") >= 24))
-        DocStreams.deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
+  private[graft] def upsertLanding(s: SparkSession, dir: String): java.nio.file.Path =
+    Staging.stageLanding(Staging.keyedDir("stream-vecs-upsert", dir, "-4"),
+      Staging.sourceSig(embSrc(dir), "u1:"), Staging.partNames("upd", 6)) {
+      val raw = s.read.schema(embSchema).parquet(embSrc(dir).toString)
+      LexStreams.cdcParts(raw, "vec_id", ArrivalBound,
+        raw.where(vecUpdPred(col("vec_id")))
+          .withColumn("embedding", updatedVec(col("embedding"))))
     }
-    s.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
-  }
 
   /** One UPSERT micro-batch fold — updateDocument on the ANN index:
     * every incoming key tombstones UNCONDITIONALLY as `(vec_id,
@@ -774,49 +584,22 @@ object VecStreams {
 
   private[graft] def upsertVecDrain(s: SparkSession, d: String,
       work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s,
-      java.nio.file.Paths.get(d, "embeddings.parquet")) {
-      upsertVecDrainBody(s, d, work)
-    }
-
-  private def upsertVecDrainBody(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit = {
-    val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
-    val trees = Seq("folds", "tombs").map(work.resolve)
-    trees.foreach(java.nio.file.Files.createDirectories(_))
-    val q = cdcUpsertVecStream(s, d)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        trees.foreach { t =>
-          EventStreams.maybeCompactFolds(s, t, id, df => df,
-            spare = SnapshotFolds.retainedRefs(t))
-        }
-        upsertVecFoldBatch(df, id, cents, work)
-        trees.foreach(SnapshotFolds.writeManifest(_, id))
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+    FoldDrain.foldAll(s, embSrc(d), work, VersionedTrees) {
+      val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
+      (FoldDrain.replay(s, upsertLanding(s, d), embSchema), cents)
+    } { cents => upsertVecFoldBatch(_, _, cents, work) }
 
   /** The read-side normalization that lets ONE relation serve both the
     * delete and the upsert lifecycle (the LexStreams discipline): fold
     * trees written without `ver` read as ver 0; tombstones without
     * `upto` read as +∞ (a delete kills every version of its key). */
-  private def versionedFolds(s: SparkSession, dirs: Seq[String]): DataFrame = {
-    val raw = s.read.parquet(dirs: _*)
-    if (raw.columns.contains("ver")) raw
-    else raw.withColumn("ver", lit(0L))
-  }
+  private def versionedFolds(s: SparkSession, dirs: Seq[String]): DataFrame =
+    s.read.schema(foldVerSchema).parquet(dirs: _*)
+      .withColumn("ver", coalesce(col("ver"), lit(0L)))
 
-  private def versionedTombs(s: SparkSession, dirs: Seq[String]): DataFrame = {
-    val raw = s.read.parquet(dirs: _*)
-    if (raw.columns.contains("upto")) raw
-    else raw.withColumn("upto", lit(Long.MaxValue))
-  }
+  private def versionedTombs(s: SparkSession, dirs: Seq[String]): DataFrame =
+    s.read.schema(tombSchema).parquet(dirs: _*)
+      .withColumn("upto", coalesce(col("upto"), lit(Long.MaxValue)))
 
   /** The VERSION-AWARE scored relation: candidates = (base lists at
     * ver −1 ∪ folds) anti-joined against the broadcast tombstones on
@@ -859,10 +642,7 @@ object VecStreams {
     * still serves its OLD version at snapshots < k. */
   private[graft] def upsertCandidatesAtSnapshot(s: SparkSession, d: String,
       work: java.nio.file.Path, snap: Long): DataFrame = {
-    def pinned(tree: String) = {
-      val t = work.resolve(tree)
-      SnapshotFolds.readManifest(t, snap).map(n => t.resolve(n).toString)
-    }
+    def pinned(tree: String) = pinnedDirs(work.resolve(tree), snap)
     upsertCandidatesWithDirs(s, d, pinned("folds"), pinned("tombs"))
   }
 
@@ -877,8 +657,8 @@ object VecStreams {
       work: java.nio.file.Path): java.nio.file.Path = {
     import s.implicits._
     val root = foldBaseDir(d)
-    val foldDirsIn = treeDirs(work, "folds")
-    val tombDirs = treeDirs(work, "tombs")
+    val foldDirsIn = liveDirs(work.resolve("folds"))
+    val tombDirs = liveDirs(work.resolve("tombs"))
     val base = s.read.parquet(s"$root/lists")
       .select(col("vec_id"), col("label"), col("embedding"))
       .withColumn("ver", lit(-1L))
@@ -926,13 +706,11 @@ object VecStreams {
     * already paying ([[restageFromIndex]], spec-pinned). */
   def e2uVecUpsert(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2u", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e2u", dir, "-4")
     DocStreams.deleteTree(work)
     upsertVecDrain(s, dir, work)
     SimOps.topK(upsertCandidatesWithDirs(s, dir,
-      treeDirs(work, "folds"), treeDirs(work, "tombs")), 3)
+      liveDirs(work.resolve("folds")), liveDirs(work.resolve("tombs"))), 3)
   }
 
   // ───────────────────────── tiered fold merge (e2tm) ─────────────────
@@ -958,9 +736,7 @@ object VecStreams {
     * overhead (listing + cell filter per dir) at O(TierFanout). */
   def e2tmVecTierMerge(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2tm", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = Staging.keyedDir("stream-e2tm", dir, "-4")
     DocStreams.deleteTree(work)
     e2fDrain(s, dir, work)
     EventStreams.maybeTierMerge(s, work.resolve("folds"))

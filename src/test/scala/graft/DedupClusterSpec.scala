@@ -20,7 +20,7 @@ class DedupClusterSpec extends AnyFunSuite {
     * chain-adjacent: one component of diameter 9), plus a 5-doc
     * exact-duplicate clique, plus 3 singletons that must not appear. */
   private lazy val fixtureDir: String = {
-    val dir = "/root/repo/target/fixtures/test-e16chain"
+    val dir = s"${graft.util.Staging.root}/test-e16chain"
     val chain = (0 until 10).map { i =>
       val toks = (4 * i until 4 * i + 12).map(t => f"tok$t%03d")
       (100L + i, toks.mkString(" "), "en", "chain", toks.mkString(" ").length.toLong)
@@ -120,6 +120,23 @@ class DedupClusterSpec extends AnyFunSuite {
     val leaked = snapshots() -- before
     assert(leaked.isEmpty,
       s"non-converged run left checkpoint snapshots behind: $leaked")
+  }
+
+  test("malformed or < 1 loop knobs fail by name before the loop runs") {
+    val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
+    for ((key, v) <- Seq("graft.e16.ckptEvery" -> "0",
+        "graft.e16.ckptEvery" -> "three", "graft.e16.maxIters" -> "-1")) {
+      System.setProperty(key, v)
+      try {
+        val e = intercept[IllegalArgumentException] {
+          ClusterOps.e16WithStats(spark, fixtureDir)
+        }
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$v'"),
+          e.getMessage)
+      } finally System.clearProperty(key)
+      // rejected before the loop tuned the session
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == parts0)
+    }
   }
 
   test("the loop restores session confs it tunes") {

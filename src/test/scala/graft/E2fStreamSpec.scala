@@ -119,9 +119,7 @@ class E2fStreamSpec extends AnyFunSuite {
       assert(declared.forall(_.last == VecStreams.DeclaredVecSnap))
       // SURVIVAL: the drain's work dir now holds a compact=2 covering
       // batches 0..2, yet the pinned dirs must still resolve
-      val work = java.nio.file.Paths.get(
-        sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-        "stream-e2z", graft.util.PathKeys.keyedName(sf) + "-4")
+      val work = graft.util.Staging.keyedDir("stream-e2z", sf, "-4")
       val foldRoot = work.resolve("folds")
       assert(java.nio.file.Files.isDirectory(foldRoot.resolve("compact=2")),
         "batch 3 must have compacted the earlier batches")
@@ -190,9 +188,7 @@ class E2fStreamSpec extends AnyFunSuite {
     assert(declared.nonEmpty)
     assert(!declared.exists(r => tombIds(r(2).asInstanceOf[Long])),
       "no tombstoned vector may be served")
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2d", graft.util.PathKeys.keyedName(sf) + "-4")
+    val work = graft.util.Staging.keyedDir("stream-e2d", sf, "-4")
     def cands(snap: Long) =
       VecStreams.tombCandidatesAtSnapshot(spark, sf, work, snap)
         .collect().map(_.toSeq).toSet
@@ -332,9 +328,7 @@ class E2fStreamSpec extends AnyFunSuite {
     val declared = VecStreams.e2uVecUpsert(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(declared.nonEmpty)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2u", graft.util.PathKeys.keyedName(sf) + "-4")
+    val work = graft.util.Staging.keyedDir("stream-e2u", sf, "-4")
     // snapshot 3 — before any update batch — equals the e2f
     // append-lifecycle rows exactly
     val pre = graft.ops.SimOps.topK(
@@ -361,6 +355,36 @@ class E2fStreamSpec extends AnyFunSuite {
       "the restaged list must carry the NEW (negated) version")
     assert(lists.count() == Tables.embeddings(spark, sf).count(),
       "upserts replace, never add")
+  }
+
+  test("a ver-less fold tree and a versioned one read together normalize per dir") {
+    // one key, two versions: the append lifecycle's ver-less batch 0,
+    // then an upsert stamped ver 1 (with its `upto = 1` tombstone).
+    // Read together, the ver-less rows must take ver 0 and the stamped
+    // rows keep theirs — so only the new version serves, exactly as in
+    // a layout where both batches were stamped.
+    val cs = cents()
+    val (mixed, ref) = (freshWork(), freshWork())
+    try {
+      def asKey(q: Long) = Tables.embeddings(spark, sf).where(col("vec_id") === q)
+        .select(lit(999999L).as("vec_id"), col("label"), col("embedding"))
+      VecStreams.e2fFoldBatch(asKey(0), 0L, cs, mixed)
+      VecStreams.upsertVecFoldBatch(asKey(1), 1L, cs, mixed)
+      VecStreams.upsertVecFoldBatch(asKey(0), 0L, cs, ref)
+      VecStreams.upsertVecFoldBatch(asKey(1), 1L, cs, ref)
+      def served(w: java.nio.file.Path) =
+        VecStreams.upsertCandidatesWithDirs(spark, sf,
+            EventStreams.foldDirsToRead(w.resolve("folds")),
+            EventStreams.foldDirsToRead(w.resolve("tombs")))
+          .where(col("cand_id") === 999999L)
+          .collect().map(_.toSeq.mkString(",")).sorted.toSeq
+      val want = served(ref)
+      assert(want.nonEmpty, "the stamped layout must serve the new version")
+      assert(served(mixed) == want)
+    } finally {
+      graft.streaming.DocStreams.deleteTree(mixed)
+      graft.streaming.DocStreams.deleteTree(ref)
+    }
   }
 
   test("e2tm: tier merge collapses the read set, never touches base lists, never changes rows") {
@@ -392,9 +416,7 @@ class E2fStreamSpec extends AnyFunSuite {
           "drift-gated restage retrains the base)")
       // the read set collapsed to ONE dir; pinned snapshots keep
       // resolving (manifest-referenced dirs were spared)
-      val work = Paths.get(
-        sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-        "stream-e2tm", graft.util.PathKeys.keyedName(sf) + "-4")
+      val work = graft.util.Staging.keyedDir("stream-e2tm", sf, "-4")
       val t = work.resolve("folds")
       val dirs = EventStreams.foldDirsToRead(t)
       assert(dirs.size == 1, s"fold read set must collapse to one dir: $dirs")

@@ -76,7 +76,7 @@ class E71RetrievalSpec extends AnyFunSuite {
       assert(rs.map(_.getInt(1)).sorted.toSeq == (1 to rs.length))
       assert(rs.forall(_.getLong(2) != q))
     }
-    val fixRoot = sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures")
+    val fixRoot = graft.util.Staging.root
     val key = graft.util.PathKeys.keyedName(sf)
     val lexWork = java.nio.file.Paths.get(fixRoot, "stream-e71v-lex", key + "-4")
     val vecWork = java.nio.file.Paths.get(fixRoot, "stream-e71v-vec", key + "-4")

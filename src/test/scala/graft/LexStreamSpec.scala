@@ -82,9 +82,7 @@ class LexStreamSpec extends AnyFunSuite {
         .collect().map(_.toSeq).toSeq
       assert(declared.nonEmpty)
       assert(declared.forall(_.last == LexStreams.DeclaredLexSnap))
-      val work = java.nio.file.Paths.get(
-        sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-        "stream-e35z", graft.util.PathKeys.keyedName(sf) + "-4")
+      val work = graft.util.Staging.keyedDir("stream-e35z", sf, "-4")
       // SURVIVAL: batch 3's step compacted batches 0..2 out of the
       // current read set of BOTH trees; the pinned dirs must resolve
       for (tree <- Seq("segs", "lens")) {
@@ -181,9 +179,7 @@ class LexStreamSpec extends AnyFunSuite {
           "mass-gated merge touches the base)")
       // the read set collapsed to ONE dir per tree; pinned snapshots
       // keep resolving (manifest-referenced dirs were spared)
-      val work = Paths.get(
-        sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-        "stream-e35t", graft.util.PathKeys.keyedName(sf) + "-4")
+      val work = graft.util.Staging.keyedDir("stream-e35t", sf, "-4")
       for (tree <- Seq("segs", "lens")) {
         val t = work.resolve(tree)
         val dirs = graft.streaming.EventStreams.foldDirsToRead(t)
@@ -240,9 +236,7 @@ class LexStreamSpec extends AnyFunSuite {
     assert(declared.nonEmpty)
     assert(!declared.exists(r => tombIds(r.getLong(2))),
       "no tombstoned doc may be served")
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35d", graft.util.PathKeys.keyedName(sf) + "-4")
+    val work = graft.util.Staging.keyedDir("stream-e35d", sf, "-4")
     // PINNED PRE-DELETE VISIBILITY: snapshot 3 (before any delete
     // batch) must equal the one-shot fold of ALL arrivals with NO
     // tombstones — deleted docs still candidates, still counted
@@ -448,9 +442,7 @@ class LexStreamSpec extends AnyFunSuite {
     val declared = LexStreams.e35uLexUpsert(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(declared.nonEmpty)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35u", graft.util.PathKeys.keyedName(sf) + "-4")
+    val work = graft.util.Staging.keyedDir("stream-e35u", sf, "-4")
     // snapshot 3 — before any update batch — must equal the e35f
     // append-lifecycle rows exactly: until an update arrives, the
     // upsert lifecycle IS the append lifecycle

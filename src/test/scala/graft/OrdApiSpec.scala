@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ord.OrdApi
+import graft.ord.{OrdApi, OrdFixtures}
 
 /** The five reference scrape modes as library calls — range semantics
   * pinned to web_scrpaer_2.py (1-based, end-inclusive, clamped). */
@@ -56,7 +56,7 @@ class OrdApiSpec extends AnyFunSuite {
     OrdApi.saveFormatted(spark, tmp.toString, corpus = Some(f))
     assert(java.util.Arrays.equals(
       java.nio.file.Files.readAllBytes(tmp),
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"/root/reference/$f"))))
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(OrdFixtures.referenceDir, f))))
     java.nio.file.Files.delete(tmp)
   }
 

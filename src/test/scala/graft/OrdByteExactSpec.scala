@@ -22,7 +22,7 @@ class OrdByteExactSpec extends AnyFunSuite {
     val (datasets, _) = OrdFixtures.parseAll()
     val byFile = datasets.groupBy(_.file) // groupBy preserves seq order
     files.foreach { f =>
-      val orig = Files.readAllBytes(Paths.get(s"/root/reference/$f"))
+      val orig = Files.readAllBytes(Paths.get(OrdFixtures.referenceDir, f))
       val regen = OrdJson.renderBytes(byFile(f))
       if (!java.util.Arrays.equals(regen, orig)) {
         val o = new String(orig, "UTF-8"); val r = new String(regen, "UTF-8")
@@ -41,7 +41,7 @@ class OrdByteExactSpec extends AnyFunSuite {
     OrdJson.writeFile(tmp.toString,
       datasets.filter(_.file == f))
     assert(java.util.Arrays.equals(
-      Files.readAllBytes(tmp), Files.readAllBytes(Paths.get(s"/root/reference/$f"))))
+      Files.readAllBytes(tmp), Files.readAllBytes(Paths.get(OrdFixtures.referenceDir, f))))
     Files.delete(tmp)
   }
 

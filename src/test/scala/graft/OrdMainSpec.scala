@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ord.{OrdApi, OrdMain}
+import graft.ord.{OrdApi, OrdFixtures, OrdMain}
 
 import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Paths}
@@ -77,7 +77,7 @@ class OrdMainSpec extends AnyFunSuite {
     assert(out.contains(s"SAVED=$tmp"))
     assert(java.util.Arrays.equals(
       Files.readAllBytes(tmp),
-      Files.readAllBytes(Paths.get(s"/root/reference/$corpus"))),
+      Files.readAllBytes(Paths.get(OrdFixtures.referenceDir, corpus))),
       s"saved document differs from golden $corpus")
     Files.delete(tmp)
   }

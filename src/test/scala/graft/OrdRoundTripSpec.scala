@@ -40,7 +40,7 @@ class OrdRoundTripSpec extends AnyFunSuite {
     val byFile = datasets.groupBy(_.file)
     assert(byFile.size == 5)
     for ((file, ds) <- byFile) {
-      val original = mapper.readTree(new File(s"/root/reference/$file"))
+      val original = mapper.readTree(new File(OrdFixtures.referenceDir, file))
       val rebuilt = OrdFixtures.renderFile(mapper, ds)
       val d = diff(file, original, rebuilt)
       assert(d.isEmpty, d.getOrElse(""))

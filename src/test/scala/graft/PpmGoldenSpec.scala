@@ -17,7 +17,7 @@ class PpmGoldenSpec extends AnyFunSuite {
 
   test("decodePpmFrames parses golden .ppm files from the binaryFile source") {
     val dir = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
+      graft.util.Staging.root,
       "ppm-golden")
     java.nio.file.Files.createDirectories(dir)
     // known geometries spanning the sampler's cases (h < 4 and h > 4),
@@ -73,7 +73,7 @@ class PpmGoldenSpec extends AnyFunSuite {
 
   test("resizePpm halves golden .ppm files: geometry, gather, checksum, feature") {
     val dir = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
+      graft.util.Staging.root,
       "ppm-golden-resize")
     java.nio.file.Files.createDirectories(dir)
     // odd and even dimensions: the halving truncates, the gather must

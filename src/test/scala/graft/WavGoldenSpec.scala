@@ -40,7 +40,7 @@ class WavGoldenSpec extends AnyFunSuite {
 
   test("decodeWavMeta parses golden .wav files from the binaryFile source") {
     val dir = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
+      graft.util.Staging.root,
       "wav-golden")
     java.nio.file.Files.createDirectories(dir)
     //                   id  ch  rate  bits  n    fmtSize

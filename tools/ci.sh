@@ -17,6 +17,16 @@ cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 OUT="${2:-/tmp/vout}"
 
+# the staging contract (graft.util.Staging) is the one place that reads
+# the fixture root and touches a staged-dir marker: any other main
+# source doing so has copied the contract by hand
+STAGING=src/main/scala/graft/util/Staging.scala
+if grep -rn --include='*.scala' -e 'GRAFT_FIXTURE_DIR' -e '"_STAGED"' \
+    -e '"_STAGED_SIG"' src/main/scala | grep -v "^$STAGING:"; then
+  echo "ci.sh: staging contract used outside $STAGING (lines above)" >&2
+  exit 1
+fi
+
 # one sbt invocation, one JVM: unit tests, correctness dump, smoke,
 # plan dumps (Plans writes docs/plans/<key>.txt for every declared key)
 sbt -batch test \
